@@ -114,7 +114,36 @@ CANONICAL_BENCH_CPUS = 32
 
 
 class _SkipRoundArtifact(Exception):
-    """Internal: non-canonical SF — skip the round-keyed write."""
+    """Internal: non-canonical SF or core count — skip the round-keyed
+    write."""
+
+
+def require_canonical_round_scale(sf_val, cpus: str) -> None:
+    """Raise _SkipRoundArtifact unless the run is at the canonical round
+    scale: ``sf_val`` equals CANONICAL_BENCH_SF and ``cpus`` (the raw
+    SPARK_GRAFT_CPUS text) parses as an integer equal to
+    CANONICAL_BENCH_CPUS. Text that does not parse ('8x') refuses too,
+    so a malformed core count can never pass as canonical."""
+    if sf_val != CANONICAL_BENCH_SF:
+        print(
+            f"bench: sf={sf_val} is not the canonical round scale "
+            f"({CANONICAL_BENCH_SF}); skipping the round-keyed "
+            "artifact (rolling BENCH_FULL.json written).",
+            file=sys.stderr,
+        )
+        raise _SkipRoundArtifact
+    try:
+        canonical = int(cpus) == CANONICAL_BENCH_CPUS
+    except ValueError:
+        canonical = False
+    if not canonical:
+        print(
+            f"bench: cpus={cpus!r} is not the canonical core "
+            f"count ({CANONICAL_BENCH_CPUS}); skipping the "
+            "round-keyed artifact (rolling BENCH_FULL.json written).",
+            file=sys.stderr,
+        )
+        raise _SkipRoundArtifact
 
 
 def pinned_ratio_vs_prev(
@@ -696,23 +725,9 @@ def main() -> None:
         # must never occupy a round slot: in r11 exactly that happened
         # (inference stamped the smoke as BENCH_FULL_r11.json; the real
         # sf0.1 run was then seal-blocked and its gauges read null).
-        if sf_val != CANONICAL_BENCH_SF:
-            print(
-                f"bench: sf={sf_val} is not the canonical round scale "
-                f"({CANONICAL_BENCH_SF}); skipping the round-keyed "
-                "artifact (rolling BENCH_FULL.json written).",
-                file=sys.stderr,
-            )
-            raise _SkipRoundArtifact
-        bench_cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        if bench_cpus.isdigit() and int(bench_cpus) != CANONICAL_BENCH_CPUS:
-            print(
-                f"bench: cpus={bench_cpus} is not the canonical core "
-                f"count ({CANONICAL_BENCH_CPUS}); skipping the "
-                "round-keyed artifact (rolling BENCH_FULL.json written).",
-                file=sys.stderr,
-            )
-            raise _SkipRoundArtifact
+        require_canonical_round_scale(
+            sf_val, os.environ.get("SPARK_GRAFT_CPUS", str(CANONICAL_BENCH_CPUS))
+        )
         # Explicit round wins (ADVICE r7: if the driver's BENCH_r{N}
         # artifact for the IN-PROGRESS round already exists when bench
         # runs, max+1 inference mislabels the full artifact as the NEXT

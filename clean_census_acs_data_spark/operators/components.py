@@ -67,7 +67,9 @@ def connected_components(
         # LAZY checkpoint: the first action over it materializes the
         # blocks — the r13 action fusion below rides the convergence
         # count on that materialization, one job per round instead of
-        # two (checkpoint job + count job).
+        # two (checkpoint job + count job). That saving is the
+        # localCheckpoint path's only: a reliable checkpoint(eager=False)
+        # still runs its own write job after the count's.
         if checkpoint_dir is not None:
             return df.checkpoint(eager=eager)
         return df.localCheckpoint(eager=eager)
@@ -125,12 +127,16 @@ def connected_components(
             labels = _truncate(new_labels).select("v", "label")
             continue
         # r13 action fusion: the checkpoint is LAZY and the convergence
-        # count's job is what materializes it — one driver action per
+        # count's job is what materializes it. On the localCheckpoint
+        # path (no ``checkpoint_dir``) that is one driver action per
         # round instead of two (at bench scale each CC round was two
         # ~0.2 s job latencies on a KB-sized frame; at 100 TB this is
         # one pass over the labels instead of two). The count reads
         # every partition (count aggregates all), so the checkpoint is
         # fully materialized before `labels` is consumed next round.
+        # With ``checkpoint_dir`` set, the reliable checkpoint still
+        # writes in a separate job after the count, so that path keeps
+        # two jobs per round.
         new_labels = _truncate(new_labels, eager=False)
         changed = (
             new_labels.where(F.col("label") != F.col("old_label")).count()
@@ -205,12 +211,15 @@ def connected_components_two_phase(
     loop early), see _is_star_forest.
 
     r13 action fusion (the connected_components device): the per-phase
-    checkpoints are LAZY and the per-round signature aggregate is the
-    job that materializes them — the signature's scan computes
-    small-star over large-star over the previous round's blocks, so
-    one driver action replaces three per round (two eager checkpoint
-    jobs + the signature collect). At 100 TB this is one pass over the
-    edge list per round instead of three.
+    localCheckpoints are LAZY and the per-round signature aggregate is
+    the job that materializes them, so one driver action replaces three
+    per round (two eager checkpoint jobs + the signature collect). The
+    fusion holds because this loop only ever uses localCheckpoint. With
+    spark.checkpoint.checkpointAllMarkedAncestors at its default
+    (false), that job materializes only the topmost marked frame,
+    small-star: large-star is computed inside the same scan and its
+    blocks persisted, but its own lineage is not truncated. Plan depth stays bounded because
+    small-star's checkpoint is.
     """
     # canonical (lo, hi) undirected edge list, self-loops dropped;
     # lazy — the initial _signature below materializes it
@@ -265,10 +274,10 @@ def connected_components_two_phase(
             )
         # m = min(Γ(a) ∪ {a}) ≤ every emitted partner, so (m, x) is
         # already canonical; x == m rows are self-loops — drop them.
-        # Lazy checkpoint: materialized by the round's signature job
-        # (large-star's blocks by small-star's scan when that runs
-        # first — either way each phase's result is persisted exactly
-        # once, by the first job that reads it).
+        # Lazy localCheckpoint: materialized by the round's signature
+        # job. That job materializes only small-star's checkpoint (the
+        # topmost marked frame; see the docstring); large-star's rows
+        # are computed inside small-star's scan.
         return out.where(F.col("lo") != F.col("hi")).distinct().localCheckpoint(
             eager=False
         )

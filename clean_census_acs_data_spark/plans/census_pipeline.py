@@ -22,20 +22,23 @@ from clean_census_acs_data_spark.sources import census as C
 from clean_census_acs_data_spark.sources import rest as R
 from clean_census_acs_data_spark.sources.audit import append_audit
 from clean_census_acs_data_spark import transforms as T
-from clean_census_acs_data_spark.session import _ab_nocache, tracked_cache
+from clean_census_acs_data_spark.session import register_shared_memo
 
-# Session-level memo of fetched RESPONSE frames, keyed on everything
-# that shapes the wire bytes (r12, guide §1.2 step 1). Two registry
-# entries run the IDENTICAL fetch (census_pipeline_e2e and
-# census_write_readback: same table, year, chunking, fetcher), so the
-# second used to pay the whole mapInPandas fetch leg again. The memo
-# holds an eager localCheckpoint — the same session-shared-memo
-# discipline as the knn/minhash stages, and exactly the materialized
-# fetch output a production pipeline persists before decode anyway.
-# Keyed on applicationId so a new session never sees a stale frame;
-# disabled under the cold-A/B no-cache env (cache-vs-recompute
-# comparisons must not be subsidized).
+# Session-level memo of fetched RESPONSE frames, keyed on what shapes
+# the request (r12, guide §1.2 step 1). Two registry entries run the
+# IDENTICAL fetch (census_pipeline_e2e and census_write_readback: same
+# table, year, geography, fetcher), so the second reuses the first's
+# eager localCheckpoint instead of paying the mapInPandas fetch leg
+# again. The value is (fetcher, frame): an entry serves only the
+# fetcher object that filled it, and a call with another fetcher
+# replaces it, so the memo holds at most one frame per request shape
+# however many fetchers pass through. Keyed on applicationId so a new
+# session never sees a stale frame; teardown_shared_memos() clears it.
 _RESPONSES_MEMO: dict = {}
+register_shared_memo(_RESPONSES_MEMO, handles=lambda v: (v[1],))
+
+TRACT_GEO = "tract:*"
+ZCTA_GEO = "zip code tabulation area:*"
 
 
 def run_census_pipeline(
@@ -45,8 +48,6 @@ def run_census_pipeline(
     year: int = 2023,
     fetcher: R.FetchFn | None = None,
     audit_path: str | None = None,
-    cast_measures: bool = True,
-    chunk_size: int = 3,
     preflight: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (clean_df, dead_letter_df) for one logical table.
@@ -62,13 +63,11 @@ def run_census_pipeline(
     recorded as `variable_unavailable` audit rows when ``audit_path``
     is set. Dropped variables still appear in the output schema as
     NULL columns (the reference's reindex semantics)."""
-    cfg = C.DATASETS[table_name]
-    request_cfg = cfg
+    request_cfg = C.DATASETS[table_name]
     if preflight:
-        if fetcher is None:
-            fetcher = R.default_urllib_fetcher
+        fetcher = fetcher or R.default_urllib_fetcher
         filtered, dropped = C.preflight_datasets(
-            fetcher, year=year, datasets={table_name: cfg}
+            fetcher, year=year, datasets={table_name: request_cfg}
         )
         request_cfg = filtered[table_name]
         if dropped:
@@ -84,31 +83,47 @@ def run_census_pipeline(
                     "table_name string, variable string, year int, reason string",
                 )
                 diag.write.mode("append").parquet(audit_path + "_preflight")
-    specs = C.request_specs(
-        spark, year=year, chunk_size=chunk_size,
-        datasets={table_name: request_cfg},
-    ).where(f"table_name = '{table_name}'")
-    memo_key = (
+    return _ingest(spark, table_name, year, request_cfg, fetcher, audit_path)
+
+
+def _ingest(
+    spark: SparkSession,
+    table_name: str,
+    year: int,
+    request_cfg: dict,
+    fetcher: R.FetchFn | None,
+    audit_path: str | None,
+    geo_for: str = TRACT_GEO,
+) -> tuple[DataFrame, DataFrame]:
+    """The body both pipelines share: memoized fetch (one eager
+    localCheckpoint of the responses), audit, dead-letter split,
+    decode, normalize, rename, align and cast. Tract requests run one
+    spec per state chunk; any other geography is one national request
+    per table."""
+    key = (
         spark.sparkContext.applicationId,
         table_name,
         year,
-        chunk_size,
-        fetcher,
-        tuple(request_cfg.get("variables", ())),
+        geo_for,
+        tuple(request_cfg["variables"]),
     )
-    responses = None if _ab_nocache() else _RESPONSES_MEMO.get(memo_key)
-    if responses is None:
-        responses = R.fetch_responses(specs, fetcher=fetcher)
-        if _ab_nocache():
-            responses = responses.transform(tracked_cache)
-        else:
-            responses = responses.localCheckpoint(eager=True)
-            _RESPONSES_MEMO[memo_key] = responses
+    hit = _RESPONSES_MEMO.get(key)
+    if hit is not None and hit[0] is fetcher:
+        responses = hit[1]
+    else:
+        tract = geo_for == TRACT_GEO
+        build_specs = C.request_specs if tract else C.zcta_request_specs
+        specs = build_specs(spark, year=year, datasets={table_name: request_cfg})
+        responses = R.fetch_responses(
+            specs, fetcher=fetcher, geo_for=geo_for, num_partitions=None if tract else 4
+        ).localCheckpoint(eager=True)
+        _RESPONSES_MEMO[key] = (fetcher, responses)
     if audit_path:
         append_audit(responses, audit_path)
     ok, dead = R.split_dead_letters(responses)
 
-    expected = ["NAME"] + list(dict.fromkeys(cfg["variables"]))
+    variables = C.DATASETS[table_name]["variables"]
+    expected = C.requested_columns(variables)
     decoded = R.decode_wire(ok, expected)
 
     mapping = C.load_mapping_dict(spark)
@@ -117,10 +132,9 @@ def run_census_pipeline(
     labels = [mapping.get(v, v) for v in expected]
     out = T.align_schema(out, ["TABLE_NAME"] + labels)
 
-    if cast_measures:
-        # typed tier: measures → long, blanks + ACS sentinels → NULL
-        measure_labels = [mapping[v] for v in cfg["variables"] if v in mapping]
-        out = T.cast_clean(out, {c: "long" for c in measure_labels})
+    # typed tier: measures → long, blanks + ACS sentinels → NULL
+    measure_labels = [mapping[v] for v in variables if v in mapping]
+    out = T.cast_clean(out, {c: "long" for c in measure_labels})
     return out, dead
 
 
@@ -242,34 +256,12 @@ def run_zcta_pipeline(
     year: int = 2017,
     fetcher: R.FetchFn | None = None,
     audit_path: str | None = None,
-    cast_measures: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """The reference's second pipeline (test_final_zcta.py): 2017
     vintage, all ZCTAs in one request per dataset, geography column
     `zip code tabulation area` probed from the response (its header
     name contains spaces — kept verbatim through normalization)."""
     cfg = C.DATASETS[table_name]
-    specs = C.zcta_request_specs(spark, year=year).where(f"table_name = '{table_name}'")
-    responses = R.fetch_responses(
-        specs,
-        fetcher=fetcher,
-        geo_for="zip code tabulation area:*",
-        geo_in_states=False,
-        num_partitions=4,
-    ).transform(tracked_cache)
-    if audit_path:
-        append_audit(responses, audit_path)
-    ok, dead = R.split_dead_letters(responses)
-
-    expected = ["NAME"] + list(dict.fromkeys(cfg["variables"]))
-    decoded = R.decode_wire(ok, expected).drop("state_fips")
-
-    mapping = C.load_mapping_dict(spark)
-    out = T.normalize_columns(decoded)
-    out = T.apply_mapping(out, mapping)
-    labels = [mapping.get(v, v) for v in expected]
-    out = T.align_schema(out, ["TABLE_NAME"] + labels)
-    if cast_measures:
-        measure_labels = [mapping[v] for v in cfg["variables"] if v in mapping]
-        out = T.cast_clean(out, {c: "long" for c in measure_labels})
-    return out, dead
+    out, dead = _ingest(spark, table_name, year, cfg, fetcher, audit_path, ZCTA_GEO)
+    # national requests carry no state chunk to tag rows with
+    return out.drop("STATE_FIPS"), dead

@@ -148,9 +148,7 @@ def census_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapping rename → align → typed cast tier. Deterministic output;
     sf_dir is unused (the census source is external, not a TPC-H
     table)."""
-    clean, _dead = run_census_pipeline(
-        spark, table_name="dp02", fetcher=fake_census_fetcher, cast_measures=True
-    )
+    clean, _dead = run_census_pipeline(spark, table_name="dp02", fetcher=fake_census_fetcher)
     return clean
 
 
@@ -185,7 +183,6 @@ def census_preflight_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         table_name="dp02",
         fetcher=fake_metadata_fetcher,
-        cast_measures=True,
         preflight=True,
     )
     return clean
@@ -227,9 +224,7 @@ def census_write_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     census source, same as the sibling e2e entries)."""
     import os
 
-    clean, _dead = run_census_pipeline(
-        spark, table_name="dp02", fetcher=fake_census_fetcher, cast_measures=True
-    )
+    clean, _dead = run_census_pipeline(spark, table_name="dp02", fetcher=fake_census_fetcher)
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "spark-warehouse",

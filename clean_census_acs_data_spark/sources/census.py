@@ -22,7 +22,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 FIXTURE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 MAPPING_CSV = os.path.join(FIXTURE_DIR, "census_field_mapping.csv")
@@ -53,11 +52,6 @@ EXCLUDED_FIPS = {3, 7, 14, 43, 52}
 STATE_FIPS = [f"{i:02d}" for i in range(1, 57) if i not in EXCLUDED_FIPS]
 
 
-def load_mapping_df(spark: SparkSession) -> DataFrame:
-    """The code→label mapping as a (broadcastable) DataFrame."""
-    return spark.read.option("header", True).csv(MAPPING_CSV)
-
-
 def load_mapping_dict(spark: SparkSession) -> dict[str, str]:
     """Driver-side dict form with key cleanup (Test_census_tract.py:
     47-54) and loud collision detection (SURVEY.md §7 risk register).
@@ -66,8 +60,7 @@ def load_mapping_dict(spark: SparkSession) -> dict[str, str]:
     driver-side config metadata (the reference reads it with
     pd.read_excel on the driver too) — a Spark job + collect for it
     was one avoidable job per pipeline invocation. ``spark`` is kept
-    in the signature for call-site compatibility;
-    ``load_mapping_df`` remains the DataFrame/broadcast form."""
+    in the signature for call-site compatibility."""
     import csv
 
     from clean_census_acs_data_spark.transforms import build_mapping
@@ -78,43 +71,6 @@ def load_mapping_dict(spark: SparkSession) -> dict[str, str]:
         )
 
 
-def preflight_available_variables(
-    fetcher,
-    *,
-    year: int,
-    dataset: str,
-    variables: list[str],
-    base_url: str = "https://api.census.gov/data",
-) -> tuple[list[str], list[str]]:
-    """variables.json metadata pre-flight (reference
-    ``filter_available_variables``, Test_census_tract.py:125-133): fetch
-    ``{base}/{year}/{dataset}/variables.json`` and split the configured
-    list into (available, dropped). One metadata-sized driver-side call
-    per dataset path — never a data fetch. Without this, a variable
-    retired in a vintage rollover 400s every chunk of its dataset into
-    the dead-letter table; with it the request never carries the retired
-    variable. Unlike the reference (silent drop), the dropped list is
-    returned so callers can surface a diagnostic."""
-    available = _fetch_available_vars(fetcher, year=year, dataset=dataset, base_url=base_url)
-    keep = [v for v in variables if v in available]
-    dropped = [v for v in variables if v not in available]
-    return keep, dropped
-
-
-def _fetch_available_vars(
-    fetcher, *, year: int, dataset: str, base_url: str
-) -> set[str]:
-    import json as _json
-
-    meta_url = f"{base_url}/{year}/{dataset}/variables.json"
-    status, _hdrs, body = fetcher(meta_url, {})
-    if not (200 <= status < 300):
-        raise RuntimeError(
-            f"variables.json pre-flight failed: HTTP {status} for {meta_url}"
-        )
-    return set(_json.loads(body).get("variables", {}).keys())
-
-
 def preflight_datasets(
     fetcher,
     *,
@@ -122,10 +78,19 @@ def preflight_datasets(
     datasets: dict[str, dict] | None = None,
     base_url: str = "https://api.census.gov/data",
 ) -> tuple[dict[str, dict], list[tuple[str, str]]]:
-    """Apply the variables.json pre-flight across a catalog. Returns
-    (filtered catalog, [(table_name, dropped_variable), ...]). The
-    metadata response is fetched once per *distinct* dataset path
-    (dp02/dp03/dp05 share acs/acs5/profile → one call, not three)."""
+    """variables.json metadata pre-flight (reference
+    ``filter_available_variables``, Test_census_tract.py:125-133) across
+    a catalog. Returns (filtered catalog, [(table_name,
+    dropped_variable), ...]). Without it, a variable retired in a
+    vintage rollover 400s every chunk of its dataset into the
+    dead-letter table; with it the request never carries the retired
+    variable. Unlike the reference (silent drop), the dropped list is
+    returned so callers can surface a diagnostic. The metadata response
+    is fetched on the driver once per *distinct* dataset path
+    (dp02/dp03/dp05 share acs/acs5/profile → one call, not three) —
+    never a data fetch."""
+    import json
+
     datasets = datasets or DATASETS
     meta_cache: dict[str, set] = {}
     filtered: dict[str, dict] = {}
@@ -133,14 +98,24 @@ def preflight_datasets(
     for name, cfg in datasets.items():
         path = cfg["dataset"]
         if path not in meta_cache:
-            meta_cache[path] = _fetch_available_vars(
-                fetcher, year=year, dataset=path, base_url=base_url
-            )
+            meta_url = f"{base_url}/{year}/{path}/variables.json"
+            status, _hdrs, body = fetcher(meta_url, {})
+            if not (200 <= status < 300):
+                raise RuntimeError(
+                    f"variables.json pre-flight failed: HTTP {status} for {meta_url}"
+                )
+            meta_cache[path] = set(json.loads(body).get("variables", {}))
         available = meta_cache[path]
         keep = [v for v in cfg["variables"] if v in available]
         dropped_all.extend((name, v) for v in cfg["variables"] if v not in available)
         filtered[name] = {**cfg, "variables": keep}
     return filtered, dropped_all
+
+
+SPEC_SCHEMA = (
+    "table_name string, dataset string, year int, get_vars string, "
+    "chunk_id int, state_chunk string"
+)
 
 
 def request_specs(
@@ -154,33 +129,14 @@ def request_specs(
     state chunk) — the reference's 4×17=68 serial calls become 68
     input partitions-worth of parallel fetch work. Columns:
     table_name, dataset, year, get_vars (csv), state_chunk (csv).
-
-    Built with DataFrame ops (row 45's chunk_list as floor(rank/size))
-    so the same code scales to arbitrarily many request cells."""
-    from pyspark.sql.window import Window
-
-    datasets = datasets or DATASETS
-    states = spark.createDataFrame(
-        [(s,) for s in STATE_FIPS], "state_fips string"
-    ).withColumn(
-        "chunk_id",
-        F.floor((F.row_number().over(Window.orderBy("state_fips")) - 1) / chunk_size),
-    )
-    chunks = states.groupBy("chunk_id").agg(
-        F.concat_ws(",", F.sort_array(F.collect_list("state_fips"))).alias("state_chunk")
-    )
-    tables = spark.createDataFrame(
-        [
-            (name, cfg["dataset"], ",".join(["NAME"] + list(dict.fromkeys(cfg["variables"]))))
-            for name, cfg in datasets.items()
-        ],
-        "table_name string, dataset string, get_vars string",
-    )
-    return (
-        tables.crossJoin(chunks)
-        .withColumn("year", F.lit(year))
-        .select("table_name", "dataset", "year", "get_vars", "chunk_id", "state_chunk")
-    )
+    Chunks are the reference's chunk_list(states, 3)
+    (Test_census_tract.py:329-331); the universe is driver-side config
+    of (tables × chunks) rows, so it is built on the driver."""
+    chunks = [
+        ",".join(STATE_FIPS[i : i + chunk_size])
+        for i in range(0, len(STATE_FIPS), chunk_size)
+    ]
+    return _specs(spark, year, datasets, chunks)
 
 
 def zcta_request_specs(
@@ -190,12 +146,21 @@ def zcta_request_specs(
     datasets: dict[str, dict] | None = None,
 ) -> DataFrame:
     """The ZCTA request universe: ONE single-shot request per dataset
-    (test_final_zcta.py:191-193 — all ZCTAs at once, no chunking)."""
-    datasets = datasets or DATASETS
-    return spark.createDataFrame(
-        [
-            (name, cfg["dataset"], ",".join(["NAME"] + list(dict.fromkeys(cfg["variables"]))), year, 0, "")
-            for name, cfg in datasets.items()
-        ],
-        "table_name string, dataset string, get_vars string, year int, chunk_id int, state_chunk string",
-    ).select("table_name", "dataset", "year", "get_vars", "chunk_id", "state_chunk")
+    (test_final_zcta.py:191-193 — all ZCTAs at once, no chunking); the
+    empty state chunk marks a national request."""
+    return _specs(spark, year, datasets, [""])
+
+
+def requested_columns(variables: list[str]) -> list[str]:
+    """What a request asks for: NAME, then the variables in order with
+    duplicates dropped (reference row 13)."""
+    return ["NAME"] + list(dict.fromkeys(variables))
+
+
+def _specs(spark: SparkSession, year: int, datasets: dict | None, chunks: list[str]) -> DataFrame:
+    rows = [
+        (name, cfg["dataset"], year, ",".join(requested_columns(cfg["variables"])), i, chunk)
+        for name, cfg in (datasets or DATASETS).items()
+        for i, chunk in enumerate(chunks)
+    ]
+    return spark.createDataFrame(rows, SPEC_SCHEMA)

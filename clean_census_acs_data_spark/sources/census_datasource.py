@@ -21,8 +21,10 @@ Wire semantics preserved:
   the DSv2 contract; the reference instead appends them, which a fixed
   schema cannot express: documented divergence).
 - per-state tagging via state_fips (:169).
-- retry w/ exponential backoff on non-2xx (:138-142), fail-or-skip
-  policy per partition replacing the chunk→state fallback (:364-390).
+- retry w/ exponential backoff on non-2xx (:138-142) through
+  ``rest.request_with_retry``, the same request loop the mapInPandas
+  fetch runs; fail-or-skip policy per partition replacing the
+  chunk→state fallback (:364-390).
 
 The fetch function is injectable via the string option
 ``fetcher`` = "module:callable" so tests run the deterministic offline
@@ -32,7 +34,7 @@ fake (fake_census.py) with zero network.
 from __future__ import annotations
 
 import json
-import time
+import pkgutil
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -45,15 +47,10 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StringType, StructField, StructType
 
-DEFAULT_STATES = [f"{i:02d}" for i in range(1, 57) if i not in (3, 7, 14, 43, 52)]
+from clean_census_acs_data_spark.sources import rest as R
+from clean_census_acs_data_spark.sources.census import STATE_FIPS
+
 GEO_COLS = ("state", "county", "tract")
-
-
-def _resolve_fetcher(spec: str):
-    import importlib
-
-    mod, _, fn = spec.partition(":")
-    return getattr(importlib.import_module(mod), fn)
 
 
 def _chunks(seq: Sequence[str], n: int) -> list[list[str]]:
@@ -72,15 +69,15 @@ class CensusRestReader(DataSourceReader):
         self.dataset = options.get("dataset", "acs/acs5/profile")
         self.get_vars = options["get_vars"].split(",")
         states = options.get("states")
-        self.states = states.split(",") if states else DEFAULT_STATES
+        self.states = states.split(",") if states else STATE_FIPS
         self.chunk_size = int(options.get("chunk_size", "3"))
         self.fetcher_spec = options.get(
             "fetcher", "clean_census_acs_data_spark.sources.rest:default_urllib_fetcher"
         )
         self.base_url = options.get("base_url", "https://api.census.gov/data")
         self.api_key = options.get("api_key")
-        self.max_attempts = int(options.get("max_attempts", "5"))
-        self.backoff_base_s = float(options.get("backoff_base_s", "0.01"))
+        self.max_attempts = int(options.get("max_attempts", R.MAX_ATTEMPTS))
+        self.backoff_base_s = float(options.get("backoff_base_s", R.BACKOFF_BASE_S))
         self.on_error = options.get("on_error", "fail")  # fail | skip
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
@@ -110,8 +107,6 @@ class CensusRestReader(DataSourceReader):
         return [CensusChunkPartition(c) for c in _chunks(self.states, self.chunk_size)]
 
     def read(self, partition: CensusChunkPartition) -> Iterator[tuple]:
-        fetcher = _resolve_fetcher(self.fetcher_spec)
-        url = f"{self.base_url}/{self.year}/{self.dataset}"
         params = {
             "get": ",".join(self.get_vars),
             "for": "tract:*",
@@ -119,36 +114,28 @@ class CensusRestReader(DataSourceReader):
         }
         if self.api_key:
             params["key"] = self.api_key
-        status, body = 0, None
-        for attempt in range(self.max_attempts):
-            try:
-                status, _headers, body = fetcher(url, params)
-            except Exception:
-                status = -1
-            if 200 <= status < 300:
-                break
-            time.sleep(self.backoff_base_s * (2**attempt))
-        if not (200 <= status < 300):
+        res = R.request_with_retry(
+            pkgutil.resolve_name(self.fetcher_spec),
+            R.build_census_url(self.year, self.dataset, base=self.base_url),
+            params,
+            max_attempts=self.max_attempts,
+            backoff_base_s=self.backoff_base_s,
+        )
+        if not (200 <= res.status < 300):
             if self.on_error == "skip":
                 return  # dead-letter policy: drop the partition, keep the scan
             raise RuntimeError(
-                f"census fetch failed for states {partition.states}: HTTP {status}"
+                f"census fetch failed for states {partition.states}: HTTP {res.status}"
             )
-        data = json.loads(body)
+        data = json.loads(res.body)
         header, rows = data[0], data[1:]
         idx = {name: i for i, name in enumerate(header)}
         # row 0 = header; missing requested columns → None (NULL-fill
-        # alignment); extras not in the plan-time schema are dropped
+        # alignment); extras not in the plan-time schema are dropped;
+        # state_fips is the row's own `state` cell (per-state tagging)
+        pos = [idx.get("state" if n == "state_fips" else n) for n in self.schema_fields]
         for row in rows:
-            state = row[idx["state"]] if "state" in idx else None
-            out = []
-            for name in self.schema_fields:
-                if name == "state_fips":
-                    out.append(state)
-                else:
-                    i = idx.get(name)
-                    out.append(row[i] if i is not None else None)
-            yield tuple(out)
+            yield tuple(None if i is None else row[i] for i in pos)
 
 
 class CensusRestDataSource(DataSource):

@@ -14,9 +14,10 @@ Semantics preserved from the reference:
 - audit every attempt BEFORE the status check — failed calls are
   logged too (:118-119; SURVEY.md §3.3 calls this out as a semantic
   detail); audit rows carry only x-ratelimit* response headers (:92)
-- retry with exponential backoff on HTTP errors only (tenacity
-  @retry, :138-142) — re-implemented in-connector (stdlib only);
-  task-level spark.task.maxFailures is too coarse for a 429
+- retry with exponential backoff (tenacity @retry, :138-142) —
+  re-implemented in-connector (stdlib only) as ``request_with_retry``,
+  the one request loop this fetch and the ``census_rest`` DataSource
+  share; task-level spark.task.maxFailures is too coarse for a 429
 - permanent failures become dead-letter rows instead of the
   reference's chunk→state fallback dance (:364-390): fetch at the
   finest granularity you can and quarantine what still fails
@@ -33,6 +34,7 @@ import json
 import time
 from collections.abc import Callable, Iterator
 from datetime import datetime, timezone
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -41,6 +43,12 @@ from pyspark.sql.types import StructField, StructType, StringType, IntegerType
 
 # (status, headers, body_text) — body is the raw JSON array-of-arrays text
 FetchFn = Callable[[str, dict[str, str]], tuple[int, dict[str, str], str]]
+
+# the reference's retry envelope: stop_after_attempt(5),
+# wait_random_exponential(max=60) (Test_census_tract.py:138-142)
+MAX_ATTEMPTS = 5
+BACKOFF_BASE_S = 0.01
+BACKOFF_CAP_S = 60.0
 
 RESPONSE_SCHEMA = StructType(
     [
@@ -79,65 +87,93 @@ def build_census_url(year: int, dataset: str, *, base: str = "https://api.census
     return f"{base}/{year}/{dataset}"
 
 
+class Outcome(NamedTuple):
+    """Final state of one request after its retries."""
+
+    status: int
+    headers: dict[str, str]
+    body: str | None
+    error: str | None
+    attempts: int
+
+
+def request_with_retry(
+    fetcher: FetchFn,
+    url: str,
+    params: dict[str, str],
+    *,
+    max_attempts: int = MAX_ATTEMPTS,
+    backoff_base_s: float = BACKOFF_BASE_S,
+    pace: Callable[[], None] | None = None,
+) -> Outcome:
+    """The connector's one request loop: up to ``max_attempts`` calls,
+    retrying any non-2xx answer after an exponential backoff capped at
+    ``BACKOFF_CAP_S``. A transport exception is status -1 with its text
+    as the error. No sleep follows the last attempt. ``pace`` runs
+    before every attempt (the caller's throttle)."""
+    status, headers, error = 0, {}, None
+    for attempt in range(max_attempts):
+        if attempt:
+            time.sleep(min(BACKOFF_CAP_S, backoff_base_s * 2 ** (attempt - 1)))
+        if pace is not None:
+            pace()
+        try:
+            status, headers, body = fetcher(url, params)
+            error = None
+        except Exception as e:  # transport error → retryable
+            status, headers, body, error = -1, {}, None, str(e)[:200]
+        if 200 <= status < 300:
+            return Outcome(status, headers, body, None, attempt + 1)
+        error = error or (body or "")[:200]  # resp.text[:200] (:368)
+    return Outcome(status, headers, None, error, max_attempts)
+
+
 def fetch_responses(
     specs: DataFrame,
     *,
     fetcher: FetchFn | None = None,
     api_key: str | None = None,
     geo_for: str = "tract:*",
-    geo_in_states: bool = True,
-    max_attempts: int = 5,
-    backoff_base_s: float = 0.01,
-    backoff_cap_s: float = 60.0,
     min_interval_s: float = 0.0,
     base_url: str = "https://api.census.gov/data",
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Execute every request spec on executors; one output row per spec
-    with status/body/audit columns (audit recorded for every attempt's
-    final state, success or not). ``min_interval_s`` is a per-partition
-    token bucket — with P partitions the aggregate rate is ≤ P/interval,
-    the knob that reproduces (or relaxes) the reference's 10 s throttle.
+    with status/body/audit columns (audit recorded for every request's
+    final state, success or not). A spec with a state chunk is scoped
+    ``in=state:<chunk>`` (Test_census_tract.py:162-164); one without is
+    a national request such as the ZCTA scan (test_final_zcta.py:
+    97-101). ``min_interval_s`` is a per-partition token bucket — with
+    P partitions the aggregate rate is ≤ P/interval, the knob that
+    reproduces (or relaxes) the reference's 10 s throttle.
     """
     fetcher = fetcher or default_urllib_fetcher
     n_parts = num_partitions or 17  # the reference's 17 chunks/dataset
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         last_call = 0.0
+
+        def pace() -> None:  # token bucket (reference row 44)
+            nonlocal last_call
+            wait = last_call + min_interval_s - time.monotonic()
+            if wait > 0:
+                time.sleep(wait)
+            last_call = time.monotonic()
+
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
                 url = build_census_url(int(row.year), row.dataset, base=base_url)
                 params = {"get": row.get_vars, "for": geo_for}
-                if geo_in_states:
-                    # tract queries scope by state (Test_census_tract.py:
-                    # 162-164); ZCTA queries fetch all at once with no
-                    # `in=` clause (test_final_zcta.py:97-101)
+                if row.state_chunk:
                     params["in"] = f"state:{row.state_chunk}"
                 if api_key:
                     params["key"] = api_key  # census_get key injection (:115-116)
-                status, headers, body, err = 0, {}, None, None
-                attempts = 0
-                for attempt in range(max_attempts):
-                    attempts = attempt + 1
-                    wait = last_call + min_interval_s - time.monotonic()
-                    if wait > 0:
-                        time.sleep(wait)  # token bucket (reference row 44)
-                    last_call = time.monotonic()
-                    try:
-                        status, headers, body = fetcher(url, params)
-                    except Exception as e:  # transport error → retryable
-                        status, headers, body, err = -1, {}, None, str(e)[:200]
-                    if 200 <= status < 300:
-                        err = None
-                        break
-                    err = err or (body or "")[:200]  # resp.text[:200] (:368)
-                    # exponential backoff, capped (tenacity analog, :138-142)
-                    time.sleep(min(backoff_cap_s, backoff_base_s * (2**attempt)))
+                res = request_with_retry(fetcher, url, params, pace=pace)
                 # audit-before-status-check ordering (:118-119): record the
-                # attempt outcome whether or not it succeeded
+                # request outcome whether or not it succeeded
                 ratelimit = {
-                    k: v for k, v in headers.items() if k.lower().startswith("x-ratelimit")
+                    k: v for k, v in res.headers.items() if k.lower().startswith("x-ratelimit")
                 }  # header prefix filter (:92)
                 out.append(
                     {
@@ -146,10 +182,10 @@ def fetch_responses(
                         "year": int(row.year),
                         "state_chunk": row.state_chunk,
                         "url": url,
-                        "status": status,
-                        "attempts": attempts,
-                        "body": body if 200 <= status < 300 else None,
-                        "error": err,
+                        "status": res.status,
+                        "attempts": res.attempts,
+                        "body": res.body,
+                        "error": res.error,
                         "audit_timestamp": datetime.now(timezone.utc).isoformat(),
                         "audit_headers": json.dumps(ratelimit, ensure_ascii=False),
                         "audit_params": json.dumps(
@@ -167,9 +203,8 @@ def split_dead_letters(responses: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(successes, dead_letters) — the quarantine-table replacement for
     the reference's per-state fallback loop (Test_census_tract.py:
     364-390)."""
-    ok = responses.where((F.col("status") >= 200) & (F.col("status") < 300))
-    dead = responses.where((F.col("status") < 200) | (F.col("status") >= 300))
-    return ok, dead
+    ok = F.col("status").between(200, 299)
+    return responses.where(ok), responses.where(~ok)
 
 
 def decode_wire(responses: DataFrame, expected_vars: list[str]) -> DataFrame:

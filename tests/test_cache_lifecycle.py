@@ -398,3 +398,29 @@ def test_seal_round_keyed_stamp_requires_canonical_cpus():
     assert src.count("raise _SkipRoundArtifact") >= 2
     # the artifact records the core count it was taken at
     assert '"cpus"' in src
+
+
+def test_round_scale_guard_refuses_unparsed_core_counts():
+    """ADVICE r13: the core-count guard only refused digit strings, so a
+    SPARK_GRAFT_CPUS of '8x' or ' 8' still wrote the round-keyed
+    artifact. The guard now refuses unless the value parses and equals
+    CANONICAL_BENCH_CPUS, at the canonical SF."""
+    import importlib.util
+    import os
+
+    import pytest
+
+    spec = importlib.util.spec_from_file_location(
+        "bench_mod5", os.path.join(os.path.dirname(__file__), "..", "bench.py")
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+
+    sf = bench.CANONICAL_BENCH_SF
+    assert bench.require_canonical_round_scale(sf, "32") is None
+    for cpus in ("8", "8x", " 8"):
+        with pytest.raises(bench._SkipRoundArtifact):
+            bench.require_canonical_round_scale(sf, cpus)
+    # the SF check still comes first and refuses on its own
+    with pytest.raises(bench._SkipRoundArtifact):
+        bench.require_canonical_round_scale(0.001, "32")

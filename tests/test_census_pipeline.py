@@ -185,3 +185,54 @@ def test_observation_metrics_without_recompute(spark):
     metrics = obs.get
     assert metrics["n_rows"] == n_action
     assert metrics["n_tagged"] == n_action
+
+
+def _counting(spark, delegate):
+    """A new fetcher object that counts its calls, on the executors too,
+    with an accumulator, and answers with ``delegate``."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def fetch(url, params):
+        calls.add(1)
+        return delegate(url, params)
+
+    return fetch, calls
+
+
+def test_each_pipeline_call_fetches_once_and_memo_stays_bounded(spark, tmp_path):
+    """The responses memo: one fetch per request shape and fetcher, one
+    entry per request shape however many fetchers pass through, and
+    teardown_shared_memos() empties it."""
+    from clean_census_acs_data_spark.plans import census_pipeline as P
+    from clean_census_acs_data_spark.plans.census_pipeline import run_zcta_pipeline
+    from clean_census_acs_data_spark.session import teardown_shared_memos
+    from clean_census_acs_data_spark.sources.fake_census import fake_zcta_fetcher
+
+    audit = str(tmp_path / "usage")
+    fetch, calls = _counting(spark, fake_census_fetcher)
+    for _ in range(2):
+        clean, dead = run_census_pipeline(
+            spark, table_name="dp02", fetcher=fetch, audit_path=audit
+        )
+        clean.count(), dead.count()
+    # one fetch is 17 requests, and the state-05 chunk is tried 5 times;
+    # the second call reuses it, but still audits its own 17 requests
+    assert calls.value == 16 + 5
+    assert read_audit(spark, audit).count() == 2 * 17
+    shape = ("dp02", 2023, P.TRACT_GEO, tuple(C.DATASETS["dp02"]["variables"]))
+    size = len(P._RESPONSES_MEMO)
+
+    fresh, fresh_calls = _counting(spark, fake_census_fetcher)
+    clean, _dead = run_census_pipeline(spark, table_name="dp02", fetcher=fresh)
+    clean.count()
+    assert fresh_calls.value == 21 and calls.value == 21
+    assert len(P._RESPONSES_MEMO) == size
+    assert len([k for k in P._RESPONSES_MEMO if k[1:] == shape]) == 1
+
+    teardown_shared_memos()
+    assert not P._RESPONSES_MEMO
+
+    zfetch, zcalls = _counting(spark, fake_zcta_fetcher)
+    clean, _dead = run_zcta_pipeline(spark, table_name="dp02", fetcher=zfetch)
+    assert clean.count() == 5
+    assert zcalls.value == 1
