@@ -58,9 +58,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def spread(
-    df: DataFrame, parts: int | None = None, *, local_hint: bool | None = None
-) -> DataFrame:
+def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
     """Round-robin repartition to the session's core count before a
     compute-heavy row-local stage. The local test files are single
     row-group parquet, which scans as 1-2 input partitions — per-row
@@ -78,17 +76,9 @@ def spread(
     embeddings bodies, the widest data in the system) just to even out
     parallelism would be the scale bottleneck (VERDICT r1 #3).
 
-    ``local_hint`` (VERDICT r2 #7): the default probe
-    (``df.rdd.getNumPartitions()``) forces a driver-side physical
-    planning pass per call — correct but not free. Callers that already
-    know their deployment can skip it: ``local_hint=True`` repartitions
-    unconditionally (small local files, the test harness), and
-    ``local_hint=False`` is an unconditional no-op (cluster path, input
-    already wide) costing nothing on the driver."""
+    The partition-count probe costs one physical planning pass per call."""
     n = parts or df.sparkSession.sparkContext.defaultParallelism
-    if local_hint is False:
-        return df
-    if local_hint is None and df.rdd.getNumPartitions() >= n:
+    if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)
 

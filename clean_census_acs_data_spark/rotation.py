@@ -266,8 +266,13 @@ _LAST_CHANGE_CACHE: dict[tuple[str, str], int] = {}
 # attestation commit. Resolution failures degrade to "changed"
 # (conservative: an entry is re-attested too early, never too late).
 
-_MOD_INDEX_CACHE: dict[tuple[str, str], dict | None] = {}
-_REACH_CACHE: dict[tuple[str, str], frozenset[tuple[str, str]]] = {}
+# Both caches are keyed by repo first, so two repos sharing a relpath or
+# module name never see each other's entries. WORKTREE-derived entries
+# (every _REACH_CACHE entry, and _MOD_INDEX_CACHE's "WORKTREE" keys) are
+# dropped at the start of each rotation_order call, so an edit to the
+# working tree is seen by the next call.
+_MOD_INDEX_CACHE: dict[tuple[str, str, str], dict | None] = {}
+_REACH_CACHE: dict[tuple[str, str, str], frozenset[tuple[str, str]]] = {}
 
 
 def _index_source(repo: str, commit: str, relpath: str) -> str | None:
@@ -318,7 +323,7 @@ def _module_index(repo: str, commit: str, relpath: str) -> dict | None:
     when the file is missing or unparseable at that commit."""
     import ast
 
-    key = (commit, relpath)
+    key = (repo, commit, relpath)
     if key in _MOD_INDEX_CACHE:
         return _MOD_INDEX_CACHE[key]
     src = _index_source(repo, commit, relpath)
@@ -365,7 +370,7 @@ def _reach(repo: str, mod_name: str, fn_name: str, mod_rel: dict[str, str]) -> f
     ``mod_name.fn_name`` in the CURRENT worktree, following same-module
     references, ``from pkg.m import f`` names and ``m.f`` attribute
     chains through package-internal imports."""
-    key = (mod_name, fn_name)
+    key = (repo, mod_name, fn_name)
     if key in _REACH_CACHE:
         return _REACH_CACHE[key]
     seen: set[tuple[str, str]] = set()
@@ -447,6 +452,9 @@ def rotation_order(
     latest: dict[str, dict] | None = None,
 ) -> list[str]:
     """Order ``names`` per the five tiers in the module docstring."""
+    for key in [k for k in _MOD_INDEX_CACHE if k[1] == "WORKTREE"]:
+        del _MOD_INDEX_CACHE[key]
+    _REACH_CACHE.clear()
     if latest is None:
         try:
             latest = latest_rows(repo)

@@ -1,8 +1,8 @@
 """Diff two BENCH_FULL.json artifacts (or a git ref's committed copy
 vs the working tree) and print per-query regressions — the
 round-over-round secondary-timing comparison VERDICT r5 asked to make
-possible (bench.py's FINAL line carries the top-20; this script reads
-the COMPLETE maps).
+possible (bench.py's one stdout line carries all 41 headline timings
+but only the top-5 secondary; this script reads the COMPLETE maps).
 
 Usage:
   python scripts/bench_diff.py                 # HEAD vs working tree

@@ -100,7 +100,7 @@ def test_median_ratio_vs_prev_gauge():
 def test_pinned_ratio_gauge_and_skew_refusal():
     """VERDICT r9 #3: the pinned sentinel gauge reads pure box skew
     (trivial untouched plans only) and gates the round-keyed artifact
-    write at PINNED_SKEW_BOUND."""
+    write at PINNED_GAUGE_BOUND."""
     import importlib.util
     import os
 
@@ -117,19 +117,13 @@ def test_pinned_ratio_gauge_and_skew_refusal():
     cur = {k: 0.55 for k in pins}
     cur["dedup_ngram_jaccard"] = 40.0
     assert bench.pinned_ratio_vs_prev(prev, cur, {}) == 1.1
-    assert not bench.refuse_round_artifact(1.1)
-    # skewed box: sentinels 1.5x -> refuse
+    # skewed box: sentinels 1.5x
     assert bench.pinned_ratio_vs_prev(prev, {k: 0.75 for k in pins}, {}) == 1.5
-    assert bench.refuse_round_artifact(1.5)
-    assert not bench.refuse_round_artifact(None)  # no prior artifact: stamp
-    assert not bench.refuse_round_artifact(bench.PINNED_SKEW_BOUND)  # bound inclusive
-    # ADVICE r10: a FORCE-stamped baseline (its own gauge recorded at
-    # stamp time) chains into the refusal — a 0.9x gauge against a
-    # baseline stamped at 1.6x is really 1.44x vs the last honest round
-    assert bench.refuse_round_artifact(0.9, 1.6)
-    # and an honest run against an honest baseline is unchanged
-    assert not bench.refuse_round_artifact(0.9, None)
-    assert not bench.refuse_round_artifact(1.1, 1.0)
+    # the gauge feeds the stamp rule (decision table: test_bench_stamp.py)
+    stamp = dict(round_closed=False, artifact_exists=False, has_prior=True)
+    sf, cpus = bench.CANONICAL_BENCH_SF, str(bench.CANONICAL_BENCH_CPUS)
+    assert bench.round_stamp_refusal(sf, cpus, pinned_gauge=1.1, **stamp) is None
+    assert "hot" in bench.round_stamp_refusal(sf, cpus, pinned_gauge=1.5, **stamp)
     # sub-0.15s prior sentinels are timer noise -> excluded -> None
     prev_small = {"queries": {k: 0.01 for k in pins}, "secondary": {}}
     assert bench.pinned_ratio_vs_prev(prev_small, {k: 1.0 for k in pins}, {}) is None
@@ -139,14 +133,8 @@ def test_pinned_ratio_gauge_and_skew_refusal():
     assert all(k in QUERIES for k in pins)
 
 
-def test_seal_guard_covers_inferred_round_path():
-    """VERDICT r11 #1: the seal guard must protect an EXISTING
-    round-keyed artifact regardless of whether the round number came
-    from SPARK_GRAFT_ROUND or from inference — the r11 driver bench hit
-    the inference path and overwrote the sealed honest 27.49 s stamp
-    (pinned 1.043) with a 1.19×-hot 37.30 s one. Unforced overwrite is
-    allowed only when the new stamp's effective pinned gauge is no
-    worse (log distance from 1.0) than the sealed stamp's."""
+
+def _load_bench():
     import importlib.util
     import os
 
@@ -155,81 +143,112 @@ def test_seal_guard_covers_inferred_round_path():
     )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
+    return bench
 
-    honest = {"pinned_ratio_vs_prev": 1.043}
-    hot = {"pinned_ratio_vs_prev": 1.1885}
-    # the exact r11 incident: hot run against the sealed honest stamp
-    assert not bench.seal_supersede_ok(honest, bench.effective_pinned_gauge(hot))
-    # the recovery direction: honest rerun supersedes a hot stamp
-    assert bench.seal_supersede_ok(hot, bench.effective_pinned_gauge(honest))
-    # r13: a sealed QUIET stamp is final — even an exact-tie rerun is
-    # refused (rerunning the bench must never be improving)
-    assert not bench.seal_supersede_ok(honest, 1.043)
-    # unknown gauges on either side refuse — can't prove better
-    assert not bench.seal_supersede_ok(honest, None)
-    assert not bench.seal_supersede_ok({}, 1.0)
-    assert not bench.seal_supersede_ok({"pinned_ratio_vs_prev": None}, 1.0)
-    # a FORCE-stamped seal compares through its recorded effective gauge
-    forced = {"forced_stamp": True, "forced_stamp_pinned_ratio": 1.6}
-    assert bench.seal_supersede_ok(forced, 1.2)
-    assert not bench.seal_supersede_ok(forced, 1.7)
-    # an honest stamp measured against a forced baseline chains too:
-    # 0.9 × 1.6 = 1.44 effective
-    chained = {"pinned_ratio_vs_prev": 0.9, "ratio_prev_stamp_ratio": 1.6}
-    assert bench.effective_pinned_gauge(chained) == 0.9 * 1.6
-    assert bench.seal_supersede_ok(chained, 1.2)
-    assert not bench.seal_supersede_ok(chained, 1.5)
-    # sub-1.0 sealed gauges are QUIET (the band is one-sided): final
-    fast_box = {"pinned_ratio_vs_prev": 0.85}
-    assert not bench.seal_supersede_ok(fast_box, 1.1)
-    assert not bench.seal_supersede_ok(fast_box, 1.25)
-    # the decision site no longer keys on how the round was derived
-    with open(os.path.join(os.path.dirname(__file__), "..", "bench.py")) as f:
-        src = f.read()
-    assert "env_round.isdigit() and os.path.exists(round_path)" not in src
-    assert "seal_supersede_ok(" in src
-    # r12 review finding: a seal-only FORCE stamp (honest box, no
-    # forced_stamp_pinned_ratio recorded by the r10 rule) must gauge
-    # through its honest pinned chain, not None — otherwise a strictly
-    # better honest rerun is refused forever.
-    seal_only_forced = {"forced_stamp": True, "pinned_ratio_vs_prev": 1.12}
-    assert bench.effective_pinned_gauge(seal_only_forced) == 1.12
-    # ...and 1.12 is inside the quiet band, so the stamp is final (r13)
-    assert not bench.seal_supersede_ok(seal_only_forced, 1.01)
-    assert not bench.seal_supersede_ok(seal_only_forced, 1.3)
-    # ...and chained through a forced baseline like any honest stamp
-    seal_only_chained = {
-        "forced_stamp": True,
-        "pinned_ratio_vs_prev": 1.05,
-        "ratio_prev_stamp_ratio": 1.2,
+
+def _stamp_refusal(bench, **case):
+    """round_stamp_refusal for an open, unstamped round at the canonical
+    scale on a quiet box, with ``case`` overriding any of those."""
+    args = dict(
+        sf_val=bench.CANONICAL_BENCH_SF,
+        cpus=str(bench.CANONICAL_BENCH_CPUS),
+        round_closed=False,
+        artifact_exists=False,
+        has_prior=True,
+        pinned_gauge=1.043,
+    )
+    args.update(case)
+    return bench.round_stamp_refusal(args.pop("sf_val"), args.pop("cpus"), **args)
+
+
+def test_seal_guard_covers_inferred_round_path():
+    """VERDICT r11 #1: the seal guard must protect an EXISTING
+    round-keyed artifact regardless of whether the round number came
+    from SPARK_GRAFT_ROUND or from inference — the r11 driver bench hit
+    the inference path and overwrote the sealed honest 27.49 s stamp
+    (pinned 1.043) with a 1.19x-hot 37.30 s one. The stamp rule takes
+    no round source at all, so both paths meet the same refusal."""
+    import inspect
+
+    bench = _load_bench()
+    params = set(inspect.signature(bench.round_stamp_refusal).parameters)
+    assert params == {
+        "sf_val",
+        "cpus",
+        "round_closed",
+        "artifact_exists",
+        "has_prior",
+        "pinned_gauge",
     }
-    assert bench.effective_pinned_gauge(seal_only_chained) == 1.05 * 1.2
-    # a forced stamp with NO gauge at all still refuses (can't compare)
-    assert bench.effective_pinned_gauge({"forced_stamp": True}) is None
-    assert not bench.seal_supersede_ok({"forced_stamp": True}, 1.0)
+    # the exact r11 incident: a hot run against the sealed honest stamp
+    refusal = _stamp_refusal(bench, artifact_exists=True, pinned_gauge=1.1885)
+    assert refusal and "stamped" in refusal
+    # an honest rerun cannot overwrite either, nor can an unknown gauge
+    for gauge in (1.043, 0.9, None):
+        refusal = _stamp_refusal(bench, artifact_exists=True, pinned_gauge=gauge)
+        assert refusal and "stamped" in refusal, gauge
+    # the same run on an unstamped round is written
+    assert _stamp_refusal(bench, pinned_gauge=1.043) is None
 
 
 def test_seal_guard_refuses_closed_rounds_unconditionally():
-    """r12 review finding: the gauge-only supersede rule regressed the
-    stale-env protection — SPARK_GRAFT_ROUND left at a CLOSED round on
-    a quiet box would relabel current-round-code timings as the old
+    """r12 review finding: SPARK_GRAFT_ROUND left at a CLOSED round on a
+    quiet box would relabel current-round-code timings as the old
     round. Once the driver's BENCH_r{N}.json exists, round N is closed
-    and its BENCH_FULL_r{N} is immutable without FORCE; the gauge
-    contest applies only to same-round re-stamps (the driver's
-    post-close bench runs before BENCH_r{N} lands)."""
+    and its BENCH_FULL_r{N} is never written, whatever the gauge, and
+    the closed check wins over every gauge reading."""
+    bench = _load_bench()
+    for exists in (False, True):
+        for prior, gauge in ((True, 1.0), (True, 0.9468), (True, 1.5), (False, None)):
+            refusal = _stamp_refusal(
+                bench,
+                round_closed=True,
+                artifact_exists=exists,
+                has_prior=prior,
+                pinned_gauge=gauge,
+            )
+            assert refusal and "closed" in refusal, (exists, prior, gauge)
+
+
+def test_seal_first_quiet_stamp_is_final():
+    """r13 measurement fix (VERDICT r12 'What's wrong #2' / ask #3):
+    letting the lowest-cost quiet rerun win made re-running the bench
+    strictly improving — the sealed r12 stamp was the BEST of seven
+    same-code runs spanning 32.3-46.4 s, a biased-low order statistic.
+    A round's first stamp is final: no rerun replaces it, however quiet
+    or cheap, and the rule reads no cost at all."""
+    bench = _load_bench()
+    # the first quiet stamp is written
+    assert _stamp_refusal(bench, pinned_gauge=0.9813) is None
+    # no later run replaces it: cheaper, tied, sub-1.0 or still quiet
+    for gauge in (0.9468, 0.99, 1.0, 0.857, 1.043):
+        refusal = _stamp_refusal(bench, artifact_exists=True, pinned_gauge=gauge)
+        assert refusal and "final" in refusal, gauge
+
+
+def test_seal_round_keyed_stamp_requires_canonical_cpus():
+    """r13: the driver's scaling probe re-runs bench at
+    SPARK_GRAFT_CPUS=8; in r12 that post-close 8-core pass occupied
+    BENCH_FULL_r13.json — an 8-core stamp is not a valid 32-core
+    cross-round baseline. The stamp rule refuses any non-canonical core
+    count (rolling file only), after the non-canonical-SF check, and
+    the artifact records the run's cpus."""
     import os
 
+    bench = _load_bench()
+    assert bench.CANONICAL_BENCH_CPUS == 32
+    for cpus in ("8", "8x", " 8", ""):
+        refusal = _stamp_refusal(bench, cpus=cpus)
+        assert refusal and f"cpus={cpus!r}" in refusal, cpus
+    # the SF check comes first and refuses on its own
+    refusal = _stamp_refusal(bench, sf_val=0.001, cpus="8")
+    assert refusal and "sf=0.001" in refusal
+    for sf in (0.01, "x"):
+        refusal = _stamp_refusal(bench, sf_val=sf)
+        assert refusal and f"sf={sf}" in refusal, sf
+    # the artifact records the core count it was taken at
     with open(os.path.join(os.path.dirname(__file__), "..", "bench.py")) as f:
-        src = f.read()
-    # the identity check exists and wins over the gauge contest
-    assert "round_closed" in src
-    assert 'f"BENCH_r{cur:02d}.json"' in src
-    assert "round_closed or not seal_supersede_ok(" in src
-    # the supersede announcement moved after both guards (no longer
-    # printed before the skew guard can still refuse the write)
-    before_guards = src.index("skew_blocked = refuse_round_artifact")
-    assert "superseding" not in src[:before_guards]
-
+        assert '"cpus"' in f.read()
 
 def test_teardown_shared_memos_unpersists_and_clears(spark):
     """ADVICE r9: reap-exempt memos need an explicit end-of-session /
@@ -330,74 +349,6 @@ def test_shingle_and_signature_memos_are_shared_and_reap_exempt(spark):
     assert sh1.count() == n_sh and sig1.count() == n_sig
     # the signature table is exactly one row per shingled doc
     assert n_sig == n_sh
-
-
-def test_seal_first_quiet_stamp_is_final():
-    """r13 measurement fix (VERDICT r12 'What's wrong #2' / ask #3):
-    the r12 rule let the lowest gauge-normalized total cost win within
-    the quiet band, which made re-running the bench strictly improving
-    — the sealed r12 stamp was the BEST of seven same-code runs
-    spanning 32.3–46.4 s, a biased-low order statistic. Now the FIRST
-    quiet-band stamp is final: no unforced supersede, cost arguments
-    ignored; only a stamp taken on a skewed box (gauge outside the
-    band) may be replaced, by the r11 gauge-distance recovery rule."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod4", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
-    quiet = {
-        "pinned_ratio_vs_prev": 0.9813,
-        "value": 46.434,
-        "secondary_total": 485.9005,
-    }
-    # the r12 min-of-seven mechanism is dead: a cheaper quiet rerun no
-    # longer supersedes a sealed quiet stamp, costs or not
-    assert not bench.seal_supersede_ok(
-        quiet, 0.9468, sealed_cost=532.3345, new_cost=411.5
-    )
-    assert not bench.seal_supersede_ok(quiet, 0.99)
-    assert not bench.seal_supersede_ok(quiet, 1.0)
-    # sub-1.0 sealed gauges count as quiet too (one-sided band)
-    assert not bench.seal_supersede_ok(
-        {"pinned_ratio_vs_prev": 0.857}, 1.0, sealed_cost=500.0, new_cost=300.0
-    )
-    # a sealed stamp OUTSIDE the band is replaceable, but only by a
-    # gauge no further from 1.0 (the r11 recovery rule) — cost cannot
-    # buy a win in either direction
-    skewed = {"pinned_ratio_vs_prev": 1.1885, "value": 40.0, "secondary_total": 400.0}
-    assert bench.seal_supersede_ok(skewed, 1.043)
-    assert bench.seal_supersede_ok(skewed, 1.043, sealed_cost=440.0, new_cost=999.0)
-    assert not bench.seal_supersede_ok(skewed, 1.3, sealed_cost=440.0, new_cost=1.0)
-    # unknown gauges on either side still refuse
-    assert not bench.seal_supersede_ok(skewed, None)
-    assert not bench.seal_supersede_ok({}, 1.0)
-
-
-def test_seal_round_keyed_stamp_requires_canonical_cpus():
-    """r13: the driver's scaling probe re-runs bench at
-    SPARK_GRAFT_CPUS=8; in r12 that post-close 8-core pass hit the
-    round-inference path and occupied BENCH_FULL_r13.json — an 8-core
-    stamp is not a valid 32-core cross-round baseline. bench.py now
-    skips the round-keyed artifact (rolling file only) at any
-    non-canonical core count, exactly like the non-canonical-SF guard,
-    and records the run's cpus in the artifact."""
-    import os
-
-    with open(os.path.join(os.path.dirname(__file__), "..", "bench.py")) as f:
-        src = f.read()
-    assert "CANONICAL_BENCH_CPUS = 32" in src
-    # the guard raises the same skip used by the SF guard, after it
-    sf_guard = src.index("is not the canonical round scale")
-    cpu_guard = src.index("is not the canonical core")
-    assert cpu_guard > sf_guard
-    assert src.count("raise _SkipRoundArtifact") >= 2
-    # the artifact records the core count it was taken at
-    assert '"cpus"' in src
 
 
 def test_round_scale_guard_refuses_unparsed_core_counts():

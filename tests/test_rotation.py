@@ -463,3 +463,59 @@ def test_rotation_precise_tier_fronts_prior_round_rewrites():
         if row.get("round", 0) >= 13:
             continue  # attested post-rewrite — demotion is correct
         assert probe in win, f"{probe} missed the driver window"
+
+
+def test_index_caches_keyed_by_repo_and_worktree_reread(tmp_path):
+    """ADVICE r13: the module-index and reach caches were keyed without
+    the repo, so two repos sharing a relpath read each other's entries,
+    and WORKTREE entries never expired. Keys now start with the repo,
+    and each rotation_order call drops the WORKTREE-derived entries."""
+    import subprocess
+
+    from clean_census_acs_data_spark import rotation as rot
+
+    rel = os.path.join("pkg", "mod.py")
+    bodies = {
+        "a": "def f():\n    return 1\n",
+        "b": "def g():\n    return h()\n\n\ndef h():\n    return 2\n",
+    }
+    repos, heads = {}, {}
+    for name, body in bodies.items():
+        repo = tmp_path / name
+        (repo / "pkg").mkdir(parents=True)
+        (repo / rel).write_text(body)
+        git = ["git", "-C", str(repo), "-c", "user.name=t", "-c", "user.email=t@t"]
+        subprocess.run([*git, "init", "-q"], check=True)
+        subprocess.run([*git, "add", "-A"], check=True)
+        subprocess.run([*git, "commit", "-qm", "init"], check=True)
+        repos[name] = str(repo)
+        heads[name] = subprocess.run(
+            [*git, "rev-parse", "HEAD"], check=True, capture_output=True, text=True
+        ).stdout.strip()
+    mod_rel = {"pkg.mod": rel}
+    rot.clear_caches()
+    try:
+        for name, defs in (("a", {"f"}), ("b", {"g", "h"})):
+            assert set(rot._module_index(repos[name], "WORKTREE", rel)["defs"]) == defs
+            assert set(rot._module_index(repos[name], heads[name], rel)["defs"]) == defs
+        assert rot._reach(repos["a"], "pkg.mod", "g", mod_rel) == {("pkg.mod", "g")}
+        assert rot._reach(repos["b"], "pkg.mod", "g", mod_rel) == {
+            ("pkg.mod", "g"),
+            ("pkg.mod", "h"),
+        }
+        # an edit to a's working tree is seen after the next rotation call
+        with open(os.path.join(repos["a"], rel), "a") as f:
+            f.write("\n\ndef g():\n    return f()\n")
+        assert set(rot._module_index(repos["a"], "WORKTREE", rel)["defs"]) == {"f"}
+        assert rot.rotation_order([], set(), {}, repo=repos["a"], latest={}) == []
+        assert set(rot._module_index(repos["a"], "WORKTREE", rel)["defs"]) == {"f", "g"}
+        assert rot._reach(repos["a"], "pkg.mod", "g", mod_rel) == {
+            ("pkg.mod", "g"),
+            ("pkg.mod", "f"),
+        }
+        # committed versions stay cached, and b is untouched
+        assert (repos["a"], heads["a"], rel) in rot._MOD_INDEX_CACHE
+        assert set(rot._module_index(repos["a"], heads["a"], rel)["defs"]) == {"f"}
+        assert set(rot._module_index(repos["b"], "WORKTREE", rel)["defs"]) == {"g", "h"}
+    finally:
+        rot.clear_caches()
