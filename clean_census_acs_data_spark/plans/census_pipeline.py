@@ -111,12 +111,10 @@ def _ingest(
     if hit is not None and hit[0] is fetcher:
         responses = hit[1]
     else:
-        tract = geo_for == TRACT_GEO
-        build_specs = C.request_specs if tract else C.zcta_request_specs
+        build_specs = C.request_specs if geo_for == TRACT_GEO else C.zcta_request_specs
         specs = build_specs(spark, year=year, datasets={table_name: request_cfg})
-        responses = R.fetch_responses(
-            specs, fetcher=fetcher, geo_for=geo_for, num_partitions=None if tract else 4
-        ).localCheckpoint(eager=True)
+        fetched = R.fetch_responses(specs, fetcher=fetcher, geo_for=geo_for)
+        responses = fetched.localCheckpoint(eager=True)
         _RESPONSES_MEMO[key] = (fetcher, responses)
     if audit_path:
         append_audit(responses, audit_path)

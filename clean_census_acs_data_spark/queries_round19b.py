@@ -189,7 +189,11 @@ def hodges_lehmann_location(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        a = np.sort(pdf["cents"].to_numpy(np.int64))
+        # NULL balances arrive as NaN: skip them, as collect_list did in
+        # the form this replaced; a nation with none left emits no row
+        a = np.sort(pdf["cents"].dropna().to_numpy(np.int64))
+        if not len(a):
+            return pd.DataFrame({"nk": [], "np": [], "s": []})
         sums = np.add.outer(a, a)[np.triu_indices(len(a))]
         k = (len(sums) + 1) // 2
         s = int(np.partition(sums, k - 1)[k - 1])

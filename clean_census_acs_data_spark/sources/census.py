@@ -126,12 +126,13 @@ def request_specs(
     datasets: dict[str, dict] | None = None,
 ) -> DataFrame:
     """The request universe as a DataFrame: one row per (logical table,
-    state chunk) — the reference's 4×17=68 serial calls become 68
-    input partitions-worth of parallel fetch work. Columns:
-    table_name, dataset, year, get_vars (csv), state_chunk (csv).
-    Chunks are the reference's chunk_list(states, 3)
-    (Test_census_tract.py:329-331); the universe is driver-side config
-    of (tables × chunks) rows, so it is built on the driver."""
+    state chunk) — the reference's 4×17=68 serial calls become rows the
+    fetch runs concurrently, one Python task per non-empty partition
+    (see ``_specs`` for the layout). Columns: table_name, dataset, year,
+    get_vars (csv), chunk_id, state_chunk (csv). Chunks are the
+    reference's chunk_list(states, 3) (Test_census_tract.py:329-331);
+    the universe is driver-side config of (tables × chunks) rows, so it
+    is built on the driver."""
     chunks = [
         ",".join(STATE_FIPS[i : i + chunk_size])
         for i in range(0, len(STATE_FIPS), chunk_size)
@@ -158,9 +159,19 @@ def requested_columns(variables: list[str]) -> list[str]:
 
 
 def _specs(spark: SparkSession, year: int, datasets: dict | None, chunks: list[str]) -> DataFrame:
+    """The spec rows as a local relation built from an Arrow table. It
+    scans as a ``LocalTableScan`` split into min(rows, defaultParallelism)
+    partitions, none empty, whatever the Arrow conf says; a Python list
+    would scan as ``parallelize`` into defaultParallelism slices, empty
+    ones included, and the fetch runs one Python task per partition
+    (about 0.25 s of fixed worker cost each, before any request)."""
+    import pyarrow as pa  # deferred: keeps the registry import fast
+
     rows = [
         (name, cfg["dataset"], year, ",".join(requested_columns(cfg["variables"])), i, chunk)
         for name, cfg in (datasets or DATASETS).items()
         for i, chunk in enumerate(chunks)
     ]
-    return spark.createDataFrame(rows, SPEC_SCHEMA)
+    columns = [f.split()[0] for f in SPEC_SCHEMA.split(",")]
+    table = pa.table({c: [r[j] for r in rows] for j, c in enumerate(columns)})
+    return spark.createDataFrame(table, SPEC_SCHEMA)

@@ -2,11 +2,16 @@
 
 The reference fetches 68 (dataset, state-chunk) slices serially on the
 driver with a 10 s sleep each (Test_census_tract.py:342-344 — a ≥680 s
-floor). Here the specs are a DataFrame repartitioned across executors
-and fetched concurrently inside ``mapInPandas``; per-partition token
-buckets keep the aggregate request rate at or below the reference's,
-while wall-clock drops by ~the partition count (SURVEY.md §4 "scan
-parallelism").
+floor). Here the specs are a DataFrame whose partitions are fetched
+concurrently inside ``mapInPandas``, one Python task per partition
+with no shuffle in front of it. The spec builders
+(``sources/census.py``) lay the specs out as min(specs, task slots)
+non-empty partitions, so P = min(specs, slots) tasks run at once and
+each fetches its specs in a row; a per-task token bucket bounds the
+aggregate request rate at P/interval (SURVEY.md §4 "scan
+parallelism"). A Python task carries a fixed cost of about 0.25 s on
+a 4-core box before it runs any user code, so more tasks than slots
+(or empty ones) cost time and buy no concurrency.
 
 Semantics preserved from the reference:
 
@@ -136,19 +141,23 @@ def fetch_responses(
     geo_for: str = "tract:*",
     min_interval_s: float = 0.0,
     base_url: str = "https://api.census.gov/data",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Execute every request spec on executors; one output row per spec
     with status/body/audit columns (audit recorded for every request's
     final state, success or not). A spec with a state chunk is scoped
     ``in=state:<chunk>`` (Test_census_tract.py:162-164); one without is
     a national request such as the ZCTA scan (test_final_zcta.py:
-    97-101). ``min_interval_s`` is a per-partition token bucket — with
-    P partitions the aggregate rate is ≤ P/interval, the knob that
+    97-101).
+
+    The fetch runs on ``specs`` as partitioned — no repartition, so no
+    shuffle job — one Python task per partition, fetching that
+    partition's specs one after another. ``min_interval_s`` is a
+    per-task token bucket spacing consecutive attempts of one task:
+    with the spec builders' layout P = min(specs, slots) tasks run at
+    once, so the aggregate rate is ≤ P/interval, the knob that
     reproduces (or relaxes) the reference's 10 s throttle.
     """
     fetcher = fetcher or default_urllib_fetcher
-    n_parts = num_partitions or 17  # the reference's 17 chunks/dataset
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         last_call = 0.0
@@ -196,7 +205,7 @@ def fetch_responses(
                 )
             yield pd.DataFrame(out, columns=[f.name for f in RESPONSE_SCHEMA.fields])
 
-    return specs.repartition(n_parts).mapInPandas(run, RESPONSE_SCHEMA)
+    return specs.mapInPandas(run, RESPONSE_SCHEMA)
 
 
 def split_dead_letters(responses: DataFrame) -> tuple[DataFrame, DataFrame]:

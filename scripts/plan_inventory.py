@@ -73,9 +73,9 @@ def main() -> None:
         "disabled for deterministic node counts. Columns: data shuffles",
         "(Exch), broadcast-hash joins (BHJ), sort-merge joins (SMJ),",
         "broadcast-nested-loop joins (BNLJ — legitimate only for the",
-        "documented 1-row/tiny-frame crosses), cartesian products (0",
-        "everywhere except the census pipelines' 4×17 request-universe",
-        "METADATA cross — config rows, not data), heap top-k (TopK),",
+        "documented 1-row/tiny-frame crosses), cartesian products (Cart;",
+        "the same documented crosses only, allow-listed in",
+        "tests/test_plans.py), heap top-k (TopK),",
         "window group limit (WGL), windows,",
         "generators (Gen), object-hash aggs (ObjAgg), hash aggs (HAgg).",
         "Streaming entries execute through the streaming engine and are",

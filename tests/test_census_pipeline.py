@@ -115,6 +115,64 @@ def test_request_specs_shape(spark):
     assert all_states == sorted(C.STATE_FIPS)
 
 
+def _partition_sizes(df):
+    return df.rdd.glom().map(len).collect()
+
+
+def _one_table(name="dp02"):
+    return {name: C.DATASETS[name]}
+
+
+def test_fetch_layout_no_shuffle_no_empty_tasks(spark):
+    """The fetch runs one Python task per spec partition: a tract table's
+    17 specs sit in min(17, defaultParallelism) partitions, none empty,
+    and the fetch puts no Exchange in front of its mapInPandas. The
+    single ZCTA spec runs as one task."""
+    from clean_census_acs_data_spark.sources import rest as R
+
+    specs = C.request_specs(spark, datasets=_one_table())
+    sizes = _partition_sizes(specs)
+    assert len(sizes) == min(17, spark.sparkContext.defaultParallelism)
+    assert min(sizes) > 0 and sum(sizes) == 17
+
+    fetched = R.fetch_responses(specs, fetcher=fake_census_fetcher)
+    plan = fetched._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert fetched.rdd.getNumPartitions() == len(sizes)
+
+    zcta = C.zcta_request_specs(spark, datasets=_one_table())
+    assert _partition_sizes(zcta) == [1]
+    assert R.fetch_responses(zcta, fetcher=fake_census_fetcher).rdd.getNumPartitions() == 1
+
+
+def test_min_interval_paces_consecutive_requests_of_one_task(spark):
+    """``min_interval_s`` spaces the calls one task makes: with every spec
+    in one partition the 17 calls run in a row, each at least the
+    interval after the one before, and each spec answers exactly once."""
+    from clean_census_acs_data_spark.sources import rest as R
+
+    def clock_fetcher(url, params):
+        # answers at once, with the executor's clock at the call as body
+        import time
+
+        return 200, {}, repr(time.monotonic())
+
+    interval = 0.05
+    specs = C.request_specs(spark, datasets=_one_table()).coalesce(1)
+    rows = R.fetch_responses(
+        specs, fetcher=clock_fetcher, min_interval_s=interval
+    ).collect()
+    assert sorted(r.state_chunk for r in rows) == sorted(
+        r.state_chunk for r in specs.collect()
+    )
+    assert len({r.state_chunk for r in rows}) == 17
+    calls = sorted(float(r.body) for r in rows)
+    gaps = [b - a for a, b in zip(calls, calls[1:])]
+    # the pace stamps its clock just before the call: allow the few
+    # microseconds between that stamp and the fetcher's own reading
+    assert min(gaps) >= interval - 1e-3, gaps
+
+
 def test_preflight_drops_retired_variable(spark, tmp_path):
     """A variable retired from the vintage (absent from variables.json)
     must be dropped from the request — never fetched, never

@@ -252,6 +252,51 @@ def test_hodges_lehmann_brute_force(spark):
     assert got == expect and got
 
 
+def test_hodges_lehmann_skips_null_balances(spark, tmp_path):
+    """A NULL c_acctbal is skipped, not a crash: each nation's HL equals
+    the brute-force lower median of the Walsh pair sums over its
+    non-NULL balances, and a nation whose only balance is NULL emits no
+    row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    customers = [
+        (1, 0, 12.34), (2, 0, None), (3, 0, -5.0), (4, 0, 7.5), (5, 0, 100.01),
+        (6, 1, 3.0), (7, 1, 3.0), (8, 1, -2.25),
+        (9, 2, None),
+    ]
+    keys, nations, bals = map(list, zip(*customers))
+    pq.write_table(
+        pa.table(
+            {
+                "c_custkey": pa.array(keys, pa.int64()),
+                "c_nationkey": pa.array(nations, pa.int32()),
+                "c_acctbal": pa.array(bals, pa.float64()),
+            }
+        ),
+        str(tmp_path / "customer.parquet"),
+    )
+    expect = {}
+    for nk in {n for _, n, _ in customers}:
+        cents = [round(b * 100) for _, n, b in customers if n == nk and b is not None]
+        walsh = sorted(
+            a + b for i, a in enumerate(cents) for b in cents[i:]
+        )
+        if walsh:
+            s = walsh[(len(walsh) + 1) // 2 - 1]
+            expect[nk] = (len(walsh), s, s / 2)
+    got = {
+        r["nation_key"]: (
+            r["n_walsh_pairs"],
+            r["hl_doubled_cents"],
+            r["hl_location_cents"],
+        )
+        for r in QUERIES["hodges_lehmann_location"](spark, str(tmp_path)).collect()
+    }
+    assert got == expect
+    assert set(got) == {0, 1}
+
+
 def test_mann_whitney_pairwise_definition(spark):
     """The rank-sum formula must agree with the DEFINITION of U:
     2·U1 = 2·#{(x1, x2): x1 > x2} + #ties — two independent
